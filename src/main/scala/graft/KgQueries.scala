@@ -119,14 +119,8 @@ object KgQueries {
       // window/dedup computation); gate-only — the pipeline's own
       // bootstrap path is untouched.
       def c1(df: DataFrame) = df.coalesce(1)
-      val t = Dims.tiny(s)
-      val dims = Dims.Snapshot(c1(t.stratDim), c1(t.mineralDim),
-        c1(t.intervalDim), c1(t.gazetteerDim), c1(t.stratGpsDim),
-        c1(t.lithDim)).persisted()
-      val p = Hydrator.prepare(dims)
-      val prepared = Hydrator.Prepared(c1(p.stratKeyed).cache(),
-        c1(p.mineralKeyed).cache(), c1(p.gaz).cache(),
-        c1(p.lithKeyed).cache())
+      val dims = Dims.tiny(s).mapFrames(c1).persisted()
+      val prepared = Hydrator.prepare(dims).mapFrames(c1).cached()
       (dims, prepared, Linker.aliasDim(dims).coalesce(1).cache())
     })
   }

@@ -222,11 +222,14 @@ object Dims {
   final case class Snapshot(
       stratDim: DataFrame, mineralDim: DataFrame, intervalDim: DataFrame,
       gazetteerDim: DataFrame, stratGpsDim: DataFrame, lithDim: DataFrame) {
+    /** Apply `f` to every dim, each result landing in its own field. */
+    def mapFrames(f: DataFrame => DataFrame): Snapshot =
+      copy(stratDim = f(stratDim), mineralDim = f(mineralDim),
+        intervalDim = f(intervalDim), gazetteerDim = f(gazetteerDim),
+        stratGpsDim = f(stratGpsDim), lithDim = f(lithDim))
     /** Cache every dim (driver-built LocalRelations re-encode on each use
       * otherwise — snapshot tables are read-many by design). */
-    def persisted(): Snapshot =
-      Snapshot(stratDim.cache(), mineralDim.cache(), intervalDim.cache(),
-        gazetteerDim.cache(), stratGpsDim.cache(), lithDim.cache())
+    def persisted(): Snapshot = mapFrames(_.cache())
   }
 
   def snapshot(spark: SparkSession, bulkStrat: Int = 45646 - 13,

@@ -50,9 +50,11 @@ object Hydrator {
   final case class Prepared(
       stratKeyed: DataFrame, mineralKeyed: DataFrame, gaz: DataFrame,
       lithKeyed: DataFrame) {
-    def cached(): Prepared =
-      Prepared(stratKeyed.cache(), mineralKeyed.cache(), gaz.cache(),
-        lithKeyed.cache())
+    /** Apply `f` to every keyed dim, each result landing in its own field. */
+    def mapFrames(f: DataFrame => DataFrame): Prepared =
+      copy(stratKeyed = f(stratKeyed), mineralKeyed = f(mineralKeyed),
+        gaz = f(gaz), lithKeyed = f(lithKeyed))
+    def cached(): Prepared = mapFrames(_.cache())
     /** Release a [[cached]] snapshot — long-lived owners (the streaming
       * sink bootstrap) must call this when the consuming query stops, or
       * the four dim caches outlive the job. */

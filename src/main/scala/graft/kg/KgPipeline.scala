@@ -5,11 +5,18 @@ import org.apache.spark.sql.functions._
 
 /** End-to-end KG construction (BASELINE.json north_rule; SURVEY.md §3.3):
   *
-  *   pages → repartition(hash(url)) → resume anti-join → html→text extract
-  *   → batched inference (mapPartitions) → lenient parse/explode
-  *   → alignment join (broadcast | salted) → connected-components
-  *   canonicalization → hydration joins → triples table
-  *   [+ RDF materialization] + per-partition lineage/metrics rows.
+  *   pages → [bucket shard + resume anti-join] → html→text extract
+  *   → [dedup gate] → repartition(hash(url)) → batched inference
+  *   (mapPartitions) → lenient parse/explode → alignment tiers
+  *   → connected-components canonicalization → hydration joins
+  *   → triples table [+ RDF materialization] + per-partition lineage rows
+  *   → one atomic snapshot commit (graft.sources.SnapshotStore).
+  *
+  * Each per-page step is a plain function here ([[extract]],
+  * [[inferParsed]], [[alignTiers]], [[uncanonicalized]], [[hydrate]],
+  * [[failedUrls]], [[dedupLosers]]); [[run]] chains them for a batch, and
+  * the streaming skin (graft.streaming.StreamingKg) calls the same
+  * functions per micro-batch and for its failed-url re-drive.
   *
   * Scale posture (designed for 10^12 pages / 1000 executors, tested at
   * local[N]):
@@ -17,17 +24,18 @@ import org.apache.spark.sql.functions._
   *    preserves partitioning (narrow) or shuffles on aggregation keys,
   *  - all enrichment joins broadcast dictionary-sized dims — zero shuffle
   *    of the page-cardinality side,
-  *  - resume is a left_anti join against the checkpoint table (SURVEY J1):
-  *    re-running after failure processes only missing urls, and because
-  *    every stage is deterministic the union of runs equals one clean run,
+  *  - resume is a left_anti join against the store's committed `done`
+  *    table (SURVEY J1, [[runAndCommitSnapshot]]): re-running after failure
+  *    processes only missing urls, and because every stage is
+  *    deterministic the union of runs equals one clean run,
   *  - lineage/metrics are per-partition rows computed from
   *    spark_partition_id() — no driver-side collections of data rows.
   */
 object KgPipeline {
 
-  /** Url-hash bucket count shared by the triples sink, the done-set layout
-    * and the bucket-sharded resume mode (the parquet stand-in for an
-    * Iceberg `bucket(url)` partition transform). */
+  /** Url-hash bucket count shared by the triples and done staging layout
+    * and the bucket-sharded resume mode (the stand-in for an Iceberg
+    * `bucket(url)` partition transform). */
   val UrlBuckets = 64
 
   /** The bucket of a url — MUST match the sink partitioning everywhere. */
@@ -62,7 +70,7 @@ object KgPipeline {
       // candidates instead of the full dictionary matrix (Linker
       // .cosineLshCandidates) — the lever for a dictionary past broadcast
       // size. Approximate (recall-only; emitted sims stay exact), so off
-      // by default; trade measured in tools/CosinePrune. Only read when
+      // by default; recall/cost trade in PLANS.md round 5. Only read when
       // cosineAlignMinSim is set.
       cosineAlignLshPrune: Option[(Int, Int)] = None,
       canonicalize: Boolean = true,
@@ -81,29 +89,30 @@ object KgPipeline {
       // once `done` approaches page cardinality (10^12 urls cannot be a
       // pinned broadcast; AQE still picks broadcast while it fits, and
       // demotes to shuffle join when it does not). Mirrors the
-      // Hydrator.hydratePrepared(broadcastDims) duality.
+      // Hydrator.hydratePrepared(broadcastDims) duality. The same choice
+      // governs the failed-url exclusion and StreamingKg.redriveFailed's
+      // target set.
       broadcastDone: Boolean = true,
       // Some(buckets) => bucket-sharded operation (the 10^12-url resume
-      // shape PLANS.md round-4 named): this run processes ONLY pages whose
-      // url bucket (pmod(xxhash64(url), 64) — the same transform the
-      // triples/done sinks partition by) is in the set, and the done-set
-      // read prunes to exactly those bucket directories at the parquet
-      // scan (static partition pruning — no full done-set scan, and the
-      // per-shard done subset is 1/64th, so the anti-join stays a
-      // broadcast with no exchange of the page side long after the FULL
-      // done-set outgrew broadcast). Scope: sharding is exact for the
-      // per-page stages (resume, extract, infer, parse, align, hydrate —
-      // all per-url or broadcast-dim work). The corpus-GLOBAL stages see
-      // only the shard: canonicalization clusters within the shard (a
-      // cross-shard surface-variant pair collapses at the periodic
-      // compaction pass, exactly like the streaming path) and the
-      // dedupMinJaccard gate dedups within the shard only — run the
-      // corpus dedup BEFORE sharding when exact global dedup matters.
-      // Union-of-shards parity is tested on the default config's per-page
-      // path; None = process everything.
+      // shape PLANS.md round-4 named): [[runAndCommitSnapshot]] processes
+      // ONLY pages whose url bucket (pmod(xxhash64(url), 64) — the same
+      // transform the triples/done tables stage by) is in the set, and the
+      // done-set read prunes to exactly those buckets' files at the
+      // manifest (no full done-set IO, and the per-shard done subset is
+      // 1/64th, so the anti-join stays a broadcast with no exchange of the
+      // page side long after the FULL done-set outgrew broadcast). Scope:
+      // sharding is exact for the per-page stages (resume, extract, infer,
+      // parse, align, hydrate — all per-url or broadcast-dim work). The
+      // corpus-GLOBAL stages see only the shard: canonicalization clusters
+      // within the shard (a cross-shard surface-variant pair collapses at
+      // the periodic compaction pass, exactly like the streaming path) and
+      // the dedupMinJaccard gate dedups within the shard only — run the
+      // corpus dedup BEFORE sharding when exact global dedup matters, or
+      // StreamingKg.compactDedup after. Union-of-shards parity is tested
+      // on the default config's per-page path; None = process everything.
+      // [[run]] itself never reads it.
       buckets: Option[Seq[Int]] = None,
       emitRdf: Boolean = false,
-      checkpointDir: Option[String] = None,
       jobStart: java.sql.Timestamp = java.sql.Timestamp.valueOf("2024-06-01 00:00:00"),
       // Prebuilt bootstrap artifacts (dictionary dedup windows, alias
       // normalization) — build + cache once per job, reuse across runs.
@@ -125,15 +134,15 @@ object KgPipeline {
       // stage (failed_stage = "infer": empty raw after retry exhaustion;
       // "parse": unsalvageable model output) — the per-doc failure state
       // the reference keeps as "NA" placeholder rows
-      // (chtc/preprocess_extraction_direct.py:99-110). The commit entry
-      // points EXCLUDE these from the done-set, so a failed page is
-      // re-driven by the next run instead of being silently marked done
-      // with zero triples.
+      // (chtc/preprocess_extraction_direct.py:99-110).
+      // [[runAndCommitSnapshot]] EXCLUDES these from the done table, so a
+      // failed page is re-driven by the next run instead of being silently
+      // marked done with zero triples.
       failedUrls: DataFrame,
       // Unpersists this run's cached intermediates (dedup marks, parsed,
       // aligned). Call AFTER all outputs have materialized — a long-lived
       // session (e.g. one SparkSession serving many runs) leaks the cached
-      // frames otherwise; the commit entry points below call it for you.
+      // frames otherwise; [[runAndCommitSnapshot]] calls it for you.
       cleanup: () => Unit = () => ())
 
   /** Columns of the output triples table (FIXTURES.md §5). */
@@ -151,54 +160,110 @@ object KgPipeline {
 
   private val extractUdf = udf((html: Array[Byte]) => HtmlText.extract(html))
 
-  def run(spark: SparkSession, pages0: DataFrame, dims: Dims.Snapshot,
-          client: Inference.InferenceClient, cfg: Config = Config()): Result = {
-
-    // J1: resume anti-join against previously committed urls — FIRST, so
-    // already-done pages are pruned before any per-page work (broadcast
-    // anti-join: no shuffle of the page side). In bucket-sharded mode both
-    // sides narrow to the shard's buckets before the join: the page side by
-    // filter, the done side by partition-pruned scan.
-    val scoped = bucketFilter(pages0, cfg)
-    val pages = cfg.checkpointDir match {
-      case Some(dir) if fsExists(spark, s"$dir/done") =>
-        scoped.join(doneSide(readDone(spark, s"$dir/done", cfg), cfg),
-          Seq("url"), "left_anti")
-      case _ => scoped
-    }
-
-    // Extract stage: html → text (the invariant-bearing step; input_hint
-    // demands byte-identical text per url). Runs BEFORE the repartition and
-    // immediately drops `html` + the golden column: shuffling both the raw
-    // html and the text would double the heaviest data movement of the
-    // whole job (pages are the only page-cardinality shuffle there is).
-    val hasGolden = pages0.columns.contains("text")
-    val extracted0 = pages
-      .withColumn("extracted_text", extractUdf(col("html")))
-    val slim = (if (hasGolden)
-      // direct byte equality — hashing both sides would cost two extra
-      // sha256 passes per page for the same answer
-      extracted0.withColumn("extract_ok", col("extracted_text") === col("text"))
-    else extracted0.withColumn("extract_ok", lit(true)))
+  /** Extract stage: html → text plus `hashed_text` (the invariant-bearing
+    * step; input_hint demands byte-identical text per url). Drops `html`
+    * and the golden `text` column straight away: they would otherwise ride
+    * the url repartition, the only page-cardinality shuffle there is.
+    * `extract_ok` compares against the golden text when the input carries
+    * one (direct byte equality — hashing both sides would cost two extra
+    * sha256 passes per page for the same answer). */
+  def extract(pages: DataFrame): DataFrame = {
+    val extracted = pages.withColumn("extracted_text", extractUdf(col("html")))
+    (if (pages.columns.contains("text"))
+      extracted.withColumn("extract_ok", col("extracted_text") === col("text"))
+    else extracted.withColumn("extract_ok", lit(true)))
       .drop("text", "html")
       .withColumnRenamed("extracted_text", "text")
       .withColumn("hashed_text", sha2(col("text"), 256))
+  }
+
+  /** Prompt → batched inference → lenient parse (P2, B2/B3, P3-P5): the
+    * PRE-explode frame, one row per page with its `parse_status`.
+    * `promptDicts = None` derives both reference handlers' dictionaries
+    * from the dim snapshot (Config.promptDicts). */
+  def inferParsed(extracted: DataFrame, dims: Dims.Snapshot,
+                  client: Inference.InferenceClient, microBatch: Int,
+                  promptDicts: Option[Seq[Inference.HandlerDict]]): DataFrame = {
+    val prompting = promptDicts.getOrElse(Inference.promptDictsFromDims(dims))
+    PostProcess.withParsed(
+      Inference.run(extracted, client, microBatch, prompting).toDF())
+  }
+
+  /** J2: alignment tiers as `cfg` selects them — tier 1 (broadcast or
+    * salted), then the optional fuzzy and cosine tiers. Long-running
+    * callers pass the tiers' derived dictionaries prebuilt (Linker
+    * .fuzzyDict / stopGrams / cosineDict) so they are not re-derived per
+    * call; `registerCached` receives every frame the cosine LSH-prune path
+    * persists, for the caller to release. */
+  def alignTiers(parsed: DataFrame, alias: DataFrame, cfg: Config,
+                 fuzzyDict: Option[DataFrame] = None,
+                 stopGrams: Option[DataFrame] = None,
+                 cosineDict: Option[DataFrame] = None,
+                 registerCached: DataFrame => Unit = _ => ()): DataFrame = {
+    val tier1 =
+      if (cfg.saltedAlign) Linker.alignSalted(parsed, alias, cfg.saltBuckets)
+      else Linker.align(parsed, alias)
+    val tier2 = cfg.fuzzyAlignMinJaccard
+      .map(Linker.alignFuzzy(tier1, alias, _, cfg.fuzzyStopGramMaxDf,
+        prebuiltDict = fuzzyDict, prebuiltStopGrams = stopGrams))
+      .getOrElse(tier1)
+    cfg.cosineAlignMinSim
+      .map(Linker.alignCosine(tier2, alias, _, lshPrune = cfg.cosineAlignLshPrune,
+        prebuiltDict = cosineDict, registerCached = registerCached))
+      .getOrElse(tier2)
+  }
+
+  /** Canonicalization switched off: every name is its own cluster
+    * (`obj_final = obj_canonical`). The streaming paths use it until
+    * StreamingKg.compactCanonicalize runs the corpus-global step. */
+  def uncanonicalized(aligned: DataFrame): DataFrame =
+    aligned.withColumn("obj_final", col("obj_canonical"))
+      .withColumn("entity_cluster_id", xxhash64(col("obj_kind"), col("obj_canonical")))
+
+  /** J3: hydration joins, projected to the triples table's columns. */
+  def hydrate(canonical: DataFrame, prepared: Hydrator.Prepared,
+              jobStart: java.sql.Timestamp): DataFrame =
+    Hydrator.hydratePrepared(canonical, prepared, jobStart)
+      .select(TripleColumns.map(col): _*)
+
+  /** (url, failed_stage) for the pages of an [[inferParsed]] frame whose
+    * infer or parse failed (Result.failedUrls). */
+  def failedUrls(rawParsed: DataFrame): DataFrame =
+    rawParsed.filter(col("parse_status") =!= PostProcess.StatusOk)
+      .select(col("url"),
+        PostProcess.failedStage(col("parse_status")).as("failed_stage"))
+
+  /** Content-derived doc ids for the dedup gate: `doc_id = xxhash64(url)`. */
+  def withDocId(docs: DataFrame): DataFrame =
+    docs.withColumn("doc_id", xxhash64(col("url")))
+
+  /** The corpus dedup gate's loser set: one `drop_id` row per doc (of a
+    * [[withDocId]] frame carrying `text`) that is not its duplicate
+    * cluster's winner (MinHash-LSH candidates → candidate-restricted
+    * Jaccard → CC resolution, graft.ops.Dedup.dedupe; winner = cluster-min
+    * doc_id). Duplicate-cluster members only — tiny next to the corpus, so
+    * joins against it broadcast under AQE. Dedup.dedupe scans the docs
+    * several times; callers persist them. */
+  def dedupLosers(docs: DataFrame, minJaccard: Double, localProbe: Boolean): DataFrame =
+    graft.ops.Dedup.dedupe(docs.select("doc_id", "text"), minJaccard, localProbe)
+      .filter(!col("keep")).select(col("doc_id").as("drop_id"))
+
+  /** The batch chain over `pages`, uncommitted. Every page is processed:
+    * resume and bucket sharding belong to [[runAndCommitSnapshot]]. */
+  def run(spark: SparkSession, pages: DataFrame, dims: Dims.Snapshot,
+          client: Inference.InferenceClient, cfg: Config = Config()): Result = {
+    val slim = extract(pages)
 
     // Optional corpus dedup gate (training-data hygiene): runs on the
     // extracted text BEFORE any inference tokens are spent on duplicates.
-    // Doc ids are content-derived url hashes; the loser set (keep = false)
-    // is duplicate-cluster members only — tiny next to the corpus — so the
-    // marking join broadcasts under AQE. Both frames persist: `withId`
-    // because Dedup.dedupe scans the docs several times (minhash tokens,
-    // Jaccard tokens, sizes), `marked` because the lineage stats and the
-    // downstream pipeline each consume it.
+    // Both frames persist: `withId` because the gate scans the docs several
+    // times (minhash tokens, Jaccard tokens, sizes), `marked` because the
+    // lineage stats and the downstream pipeline each consume it.
     val (deduped, dedupStats, dedupCached) = cfg.dedupMinJaccard match {
       case Some(minJ) =>
-        val withId = slim.withColumn("doc_id", xxhash64(col("url")))
+        val withId = withDocId(slim)
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val losers = graft.ops.Dedup
-          .dedupe(withId.select("doc_id", "text"), minJ, cfg.canonLocalProbe)
-          .filter(!col("keep")).select(col("doc_id").as("drop_id"))
+        val losers = dedupLosers(withId, minJ, cfg.canonLocalProbe)
         val marked = withId
           .join(losers, withId("doc_id") === losers("drop_id"), "left")
           .withColumn("dedup_keep", col("drop_id").isNull)
@@ -219,50 +284,32 @@ object KgPipeline {
     // downstream work distribution + lineage.
     val extracted = deduped.repartition(cfg.numPartitions, col("url"))
 
-    // P2 + B2/B3: prompt construction + batched inference in mapPartitions.
-    val prompting = cfg.promptDicts
-      .getOrElse(Inference.promptDictsFromDims(dims))
-    val raw = Inference.run(extracted, client, cfg.microBatch, prompting)
-
-    // P3/P4/P5: lenient parse → validated triples. The PRE-explode frame is
-    // the persisted stage boundary — the downstream triple chain explodes
-    // it, and the infer/parse failure bookkeeping (lineage stages +
-    // Result.failedUrls) reads its parse_status column, all off one cache;
-    // without a persist every action would re-run extract+inference+parse
-    // from the scan (the reference commits exactly this intermediate to its
-    // cache table, chtc/db.py:56-66). Disk-backed so it degrades gracefully
-    // when the raw set outgrows executor memory at scale.
-    val rawParsed = PostProcess.withParsed(raw.toDF())
+    // The PRE-explode frame is the persisted stage boundary — the
+    // downstream triple chain explodes it, and the infer/parse failure
+    // bookkeeping (lineage stages + Result.failedUrls) reads its
+    // parse_status column, all off one cache; without a persist every
+    // action would re-run extract+inference+parse from the scan (the
+    // reference commits exactly this intermediate to its cache table,
+    // chtc/db.py:56-66). Disk-backed so it degrades gracefully when the
+    // raw set outgrows executor memory at scale.
+    val rawParsed = inferParsed(extracted, dims, client, cfg.microBatch, cfg.promptDicts)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val parsed = PostProcess.explodeParsed(rawParsed)
 
-    // J2: alignment — broadcast by default, salted shuffle variant on demand.
-    val alias = cfg.prebuiltAlias.getOrElse(Linker.aliasDim(dims))
-    val aligned0 =
-      if (cfg.saltedAlign) Linker.alignSalted(parsed, alias, cfg.saltBuckets)
-      else Linker.align(parsed, alias)
-    val aligned1 = cfg.fuzzyAlignMinJaccard
-      .map(t => Linker.alignFuzzy(aligned0, alias, t, cfg.fuzzyStopGramMaxDf))
-      .getOrElse(aligned0)
     // tier-3's LSH-prune path persists its probe/dict subtrees; collect
     // them here so Result.cleanup releases them with the run's other caches
     val tierCached = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    val aligned = cfg.cosineAlignMinSim
-      .map(t => Linker.alignCosine(aligned1, alias, t,
-        lshPrune = cfg.cosineAlignLshPrune, registerCached = tierCached += _))
-      .getOrElse(aligned1)
+    val aligned = alignTiers(PostProcess.explodeParsed(rawParsed),
+        cfg.prebuiltAlias.getOrElse(Linker.aliasDim(dims)), cfg,
+        registerCached = tierCached += _)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
     // CC canonicalization over the candidate-pair edges.
     val canonical =
       if (cfg.canonicalize) Canonicalizer(aligned, cfg.canonLocalProbe)
-      else aligned.withColumn("obj_final", col("obj_canonical"))
-        .withColumn("entity_cluster_id", xxhash64(col("obj_kind"), col("obj_canonical")))
+      else uncanonicalized(aligned)
 
-    // J3: hydration joins.
-    val hydrated = Hydrator.hydratePrepared(canonical,
-      cfg.preparedDims.getOrElse(Hydrator.prepare(dims)), cfg.jobStart)
-    val triples = hydrated.select(TripleColumns.map(col): _*)
+    val prepared = cfg.preparedDims.getOrElse(Hydrator.prepare(dims))
+    val triples = hydrate(canonical, prepared, cfg.jobStart)
 
     // Lineage/metrics: one row per partition per stage (replaces the
     // reference's job_id bookkeeping + "NA" failure placeholders,
@@ -312,78 +359,60 @@ object KgPipeline {
       .select("stage", "partition_id", "input_rows", "output_rows",
               "failed_rows", "job_start")
 
-    val failedUrls = rawParsed
-      .filter(col("parse_status") =!= PostProcess.StatusOk)
-      .select(col("url"),
-        PostProcess.failedStage(col("parse_status")).as("failed_stage"))
-
-    val rdf = if (cfg.emitRdf) Some(Rdf.fromHydrated(hydrated, dims)) else None
+    // RDF reads hydration columns the triples table does not keep
+    val rdf = if (cfg.emitRdf) Some(Rdf.fromHydrated(
+      Hydrator.hydratePrepared(canonical, prepared, cfg.jobStart), dims)) else None
     val cached = dedupCached ++ tierCached :+ rawParsed :+ aligned
-    Result(triples, lineage, rdf, failedUrls,
+    Result(triples, lineage, rdf, failedUrls(rawParsed),
       () => cached.foreach(_.unpersist(blocking = false)))
   }
 
-  /** Run + commit: write triples and lineage, then mark urls done so a
-    * subsequent run with the same checkpointDir is incremental
-    * (idempotent re-entry — running twice yields the same table). */
-  def runAndCommit(spark: SparkSession, pages: DataFrame, dims: Dims.Snapshot,
-                   client: Inference.InferenceClient, outDir: String,
-                   cfg: Config = Config()): Unit = {
-    val checkpointed = cfg.copy(checkpointDir = Some(s"$outDir/checkpoint"))
-    val res = run(spark, pages, dims, client, checkpointed)
-    // 64-way url-hash bucketing — the parquet stand-in for the Iceberg
-    // `bucket(url)` partition transform (FIXTURES.md §5): point lookups by
-    // url prune to one bucket, appends from resumed runs stay co-located.
-    res.triples
-      .withColumn("url_bucket", urlBucket(col("url")))
-      .write.mode("append").partitionBy("url_bucket").parquet(s"$outDir/triples")
-    res.lineage.write.mode("append").parquet(s"$outDir/lineage")
-    res.rdf.foreach(_.write.mode("append").parquet(s"$outDir/rdf"))
-    // commit the done-set last: urls become "done" only after data landed;
-    // append only NEWLY processed urls so the checkpoint table doesn't
-    // accumulate duplicates across resumed runs. Urls that FAILED infer or
-    // parse this run are excluded — they stay not-done, so the next run's
-    // resume anti-join re-drives them (the reference's re-drivable "NA"
-    // placeholder semantics; with a deterministic client they fail again,
-    // with a healed transport they heal).
-    val donePath = s"$outDir/checkpoint/done"
-    val newUrls =
-      if (fsExists(spark, donePath)) {
-        val done = readDone(spark, donePath, cfg)
-        bucketFilter(pages.select("url"), cfg)
-          .join(doneSide(done, cfg), Seq("url"), "left_anti")
-      } else bucketFilter(pages.select("url"), cfg)
-    // done-set layout mirrors the triples sink: url_bucket-partitioned, so
-    // a bucket-sharded resume prunes its scan to the shard's directories.
-    // (Pre-bucketing checkpoint dirs keep their flat layout — mixing flat
-    // files and partition dirs would break parquet partition discovery.)
-    val doneIsFlat = fsExists(spark, donePath) &&
-      !spark.read.parquet(donePath).columns.contains("url_bucket")
-    val committed = newUrls.join(doneSide(res.failedUrls, cfg), Seq("url"), "left_anti")
-    if (doneIsFlat) committed.write.mode("append").parquet(donePath)
-    else committed.withColumn("url_bucket", urlBucket(col("url")))
-      .write.mode("append").partitionBy("url_bucket").parquet(donePath)
-    res.cleanup()
-  }
-
-  /** Run + snapshot-commit: triples and the resume `done` set publish in
-    * ONE atomic snapshot (graft.sources.SnapshotStore — the Iceberg-commit
-    * stand-in). Compared to [[runAndCommit]]'s write-data-then-mark-done
-    * two-step (the reference's shape, chtc/db.py:56-66), a crash anywhere
-    * here leaves the store exactly at the previous snapshot: no partial
-    * data, no done-urls without data, and a re-run converges to the same
-    * final table (exactly-once with deterministic stages). */
+  /** Run + snapshot-commit — the pipeline's one commit and resume path:
+    * triples, lineage and the resume `done` set publish in ONE atomic
+    * snapshot (graft.sources.SnapshotStore — the Iceberg-commit stand-in).
+    * A crash anywhere here leaves the store exactly at the previous
+    * snapshot: no partial data, no done-urls without data, and a re-run
+    * converges to the same final table (exactly-once with deterministic
+    * stages). Returns the committed version. */
   def runAndCommitSnapshot(spark: SparkSession, pages: DataFrame, dims: Dims.Snapshot,
                            client: Inference.InferenceClient, tableDir: String,
                            cfg: Config = Config()): Int = {
+    val todo = pending(spark, pages, tableDir, cfg)
+    val res = run(spark, todo, dims, client, cfg)
+    // Urls that FAILED infer or parse this run stay out of `done`, so the
+    // next run's resume anti-join re-drives them (the reference's
+    // re-drivable "NA" placeholder semantics; with a deterministic client
+    // they fail again, with a healed transport they heal). Both url-keyed
+    // tables stage url_bucket-partitioned, so every later sharded run (and
+    // url point lookup) prunes at the manifest.
+    val snap = graft.sources.SnapshotStore.commit(spark, tableDir, Map(
+      "triples" -> res.triples.withColumn("url_bucket", urlBucket(col("url"))),
+      "lineage" -> res.lineage,
+      "done" -> todo.select("url")
+        .join(urlSet(res.failedUrls, cfg), Seq("url"), "left_anti")
+        .withColumn("url_bucket", urlBucket(col("url")))),
+      partitionBy = Map("triples" -> Seq("url_bucket"),
+        "done" -> Seq("url_bucket")))
+    res.cleanup()
+    snap
+  }
+
+  /** Resume and bucket scoping, the one place either happens: the pages of
+    * the configured shard (Config.buckets) that the store's `done` table
+    * does not list yet — a left_anti join, FIRST, so done pages are pruned
+    * before any per-page work. In bucket-sharded mode the store's
+    * url_bucket=N/ staging layout lets the MANIFEST prune the done file list
+    * to the shard's buckets before any IO. Files from pre-partitioning
+    * snapshots carry no path marker and are kept (then row-filtered);
+    * pruning is the IO saver, the bucket row predicate stays the
+    * correctness filter either way. */
+  private[graft] def pending(spark: SparkSession, pages: DataFrame, tableDir: String,
+                             cfg: Config): DataFrame = {
     import graft.sources.SnapshotStore
-    // Done-set read: in bucket-sharded mode the store's url_bucket=N/
-    // staging layout lets the MANIFEST prune the file list to the shard's
-    // buckets before any IO — the snapshot-store counterpart of the parquet
-    // checkpoint's PartitionFilters scan. Files from pre-partitioning
-    // snapshots carry no path marker and are kept (then row-filtered below);
-    // pruning is the IO saver, the bucketFilter row predicate remains the
-    // correctness filter either way.
+    def inShard(df: DataFrame): DataFrame = cfg.buckets match {
+      case Some(bs) => df.filter(urlBucket(col("url")).isin(bs.map(_.toLong): _*))
+      case None => df
+    }
     val done = cfg.buckets match {
       case Some(bs) =>
         val markers = bs.map(b => s"url_bucket=$b/")
@@ -391,32 +420,16 @@ object KgPipeline {
           f => !f.contains("url_bucket=") || markers.exists(f.contains))
       case None => SnapshotStore.read(spark, tableDir, "done")
     }
-    val scoped = bucketFilter(pages, cfg)
-    val todo = done match {
-      case Some(d) =>
-        scoped.join(
-          doneSide(bucketFilter(d.select("url"), cfg), cfg), Seq("url"), "left_anti")
-      case None => scoped
-    }
-    val res = run(spark, todo, dims, client, cfg)
-    val triples = res.triples
-      .withColumn("url_bucket", urlBucket(col("url")))
-    // failed-url exclusion: same re-drivable semantics as runAndCommit —
-    // the snapshot's done table never claims a page whose infer/parse
-    // failed this run. Both url-keyed tables stage url_bucket-partitioned,
-    // so every later sharded run (and url point lookup) prunes at the
-    // manifest.
-    val snap = SnapshotStore.commit(spark, tableDir, Map(
-      "triples" -> triples,
-      "lineage" -> res.lineage,
-      "done" -> todo.select("url")
-        .join(doneSide(res.failedUrls, cfg), Seq("url"), "left_anti")
-        .withColumn("url_bucket", urlBucket(col("url")))),
-      partitionBy = Map("triples" -> Seq("url_bucket"),
-        "done" -> Seq("url_bucket")))
-    res.cleanup()
-    snap
+    done.foldLeft(inShard(pages))((todo, d) =>
+      todo.join(urlSet(inShard(d.select("url")), cfg), Seq("url"), "left_anti"))
   }
+
+  /** A url set as a join build side: pinned broadcast (Config.broadcastDone,
+    * the default — unbeatable while it fits) or un-hinted for AQE sizing
+    * (the page-cardinality scale path — an explicit hint cannot be demoted
+    * by AQE). */
+  private[graft] def urlSet(urls: DataFrame, cfg: Config): DataFrame =
+    if (cfg.broadcastDone) broadcast(urls) else urls
 
   /** Small-file compaction for a KG snapshot store (the
     * `rewrite_data_files` maintenance job): every [[runAndCommitSnapshot]]
@@ -467,41 +480,5 @@ object KgPipeline {
         if (df.columns.contains("url_bucket")) df.drop("url_bucket") else df
       (clean.withColumn("url_bucket", urlBucket(col("url"))), Seq("url_bucket"))
     }
-  }
-
-  /** Resume done-set build side: pinned broadcast (default, unbeatable
-    * while it fits) or un-hinted for AQE sizing (the page-cardinality
-    * scale path — an explicit hint cannot be demoted by AQE). */
-  private def doneSide(done: DataFrame, cfg: Config): DataFrame =
-    if (cfg.broadcastDone) broadcast(done) else done
-
-  /** Narrow a url-keyed frame to the configured bucket shard (no-op when
-    * bucket sharding is off). */
-  private def bucketFilter(df: DataFrame, cfg: Config): DataFrame =
-    cfg.buckets match {
-      case Some(bs) => df.filter(urlBucket(col("url")).isin(bs.map(_.toLong): _*))
-      case None => df
-    }
-
-  /** Read the done-set. In bucket-sharded mode against the partitioned
-    * layout the url_bucket predicate is a PARTITION filter: the scan reads
-    * only the shard's bucket directories (verified executed-plan evidence
-    * in PLANS.md round-5 — `PartitionFilters: [url_bucket IN (...)]`,
-    * no full done-set IO). Flat (pre-bucketing) layouts fall back to a
-    * recomputed-bucket row filter — same rows, no pruning. */
-  private def readDone(spark: SparkSession, path: String, cfg: Config): DataFrame = {
-    val done0 = spark.read.parquet(path)
-    val pruned = cfg.buckets match {
-      case Some(bs) if done0.columns.contains("url_bucket") =>
-        done0.filter(col("url_bucket").isin(bs.map(_.toLong): _*))
-      case Some(bs) => done0.filter(urlBucket(col("url")).isin(bs.map(_.toLong): _*))
-      case None => done0
-    }
-    pruned.select("url")
-  }
-
-  private def fsExists(spark: SparkSession, path: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
   }
 }

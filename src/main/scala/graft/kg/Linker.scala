@@ -126,7 +126,7 @@ object Linker {
     * delta is recall: a pair sharing ONLY stop grams is never considered —
     * by construction such a pair's Jaccard is dominated by the corpus-wide
     * suffix, not the name. Off by default; skew measurement in PLANS.md
-    * round-5 (tools/FuzzySkew).
+    * round 5.
     *
     * Output schema equals [[align]]'s: `obj_canonical` swapped and
     * `obj_linked` set for tier-2 hits, untouched rows pass through. */
@@ -297,7 +297,7 @@ object Linker {
     * [[alignFuzzy]]'s gram join and ops.Similarity's near-dup path) before
     * exact re-scoring; see [[cosineLshCandidates]]. Approximate by nature
     * (a name whose argmax entity shares no band signature is missed), so
-    * off by default; recall/cost measured in tools/CosinePrune.
+    * off by default; recall/cost measured in PLANS.md round 5.
     *
     * Determinism: gram counts are small exact ints, so dot/norms are exact
     * in double and sqrt/mult/div are correctly rounded — sims are
@@ -339,10 +339,8 @@ object Linker {
   }
 
   /** The still-unlinked surface forms with their [[bucketVector]] gram
-    * embeddings — [[alignCosine]]'s probe side, shared with
-    * tools/CosinePrune so the tool measures the engine's actual vector
-    * space. */
-  private[graft] def cosineUnlinked(aligned: DataFrame, dim: Int = CosineDim): DataFrame =
+    * embeddings — [[alignCosine]]'s probe side. */
+  private def cosineUnlinked(aligned: DataFrame, dim: Int = CosineDim): DataFrame =
     aligned.filter(!col("obj_linked"))
       .select(col("obj_kind").as("f_kind"), col("obj_name").as("f_name"))
       .distinct()
@@ -351,7 +349,8 @@ object Linker {
       .drop("f_bks")
 
   /** The alias dictionary with its gram embeddings — [[alignCosine]]'s
-    * build side, shared with tools/CosinePrune. */
+    * build side; long-running callers (the streaming sink) persist it once
+    * and pass it as `prebuiltDict`. */
   private[graft] def cosineDict(alias: DataFrame, dim: Int = CosineDim): DataFrame =
     alias
       .select(col("kind").as("a_kind"), col("alias_norm"),

@@ -1,44 +1,45 @@
 package graft.kg
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
 
 /** spark-submit entrypoint for the batch KG-construction job
   * (BASELINE.json north_rule: "the whole job submits via spark-submit").
   *
   *   spark-submit --class graft.kg.Main <jar> \
   *     --pages <parquet dir | "synthetic:<sfDir>"> --out <dir> \
-  *     [--partitions N] [--salted] [--no-canonicalize] [--snapshot] \
+  *     [--partitions N] [--salted] [--no-canonicalize] \
   *     [--dedup <minJaccard>] [--open-vocabulary] [--buckets lo-hi] \
   *     [--fuzzy <minJaccard> [--fuzzy-cap <df>]] [--cosine <minSim>
   *      [--cosine-lsh planes,bands]] [--no-broadcast-done]
   *
-  * Maintenance modes (snapshot stores; run instead of a pipeline pass):
+  * A run commits triples, lineage and the resume `done` set to the
+  * snapshot store at --out in ONE atomic snapshot
+  * (KgPipeline.runAndCommitSnapshot; graft.sources.SnapshotStore gives
+  * Iceberg commit semantics — snapshot isolation, optimistic concurrency,
+  * time travel). Reruns with the same --out resume incrementally
+  * (left-anti join against the committed urls).
+  *
+  * Maintenance modes (on the snapshot store at --out; run instead of a
+  * pipeline pass):
   *     --out <dir> --compact            global CC canonicalization rewrite
   *     --out <dir> --compact-dedup <minJaccard> --pages <src>
   *                                      global cross-shard dedup rewrite
   *                                      (corpus from --pages)
-  *     --out <dir> --redrive --pages <src>
+  *     --out <dir> --redrive --pages <src> [run flags]
   *                                      re-drive the streaming failure log
+  *                                      under the run's Config
   *     --out <dir> --rewrite            small-file compaction (file layout
   *                                      only; re-establishes url_bucket=N/)
   *     --out <dir> --expire <keepLast>  retention sweep + orphan cleanup
   *
-  * Reruns with the same --out resume incrementally (left-anti join against
-  * committed urls). Two sink protocols:
-  *  - default: append to a 64-way url-bucketed parquet table + a separate
-  *    checkpoint `done` table (the reference's commit shape);
-  *  - --snapshot: triples/lineage/done publish in ONE atomic snapshot via
-  *    graft.sources.SnapshotStore (Iceberg commit semantics — snapshot
-  *    isolation, optimistic concurrency, time travel).
   * --dedup runs the corpus duplicate gate before inference (LSH →
   * verified Jaccard → CC resolution; drops counted in lineage);
   * --open-vocabulary skips the driver small-graph probes (unbounded
   * entity/dedup spaces go straight to distributed CC);
   * --buckets lo-hi (inclusive url-bucket range, 0-63) shards this run:
   * only pages in the shard's buckets process, and the resume anti-join
-  * prunes the done-set scan to those bucket directories — a 64-shard
-  * fleet covers the corpus with per-shard broadcast resume joins
+  * prunes the done-set read to those buckets' files — a 64-shard fleet
+  * covers the corpus with per-shard broadcast resume joins
   * (KgPipeline.Config.buckets scaladoc for the exact scope).
   */
 object Main {
@@ -72,39 +73,14 @@ object Main {
       spark.stop(); return
     }
     if (opts.contains("compact-dedup")) {
-      val corpus =
-        (if (pagesSrc.startsWith("synthetic:"))
-          Pages.all(spark, pagesSrc.stripPrefix("synthetic:"))
-        else spark.read.parquet(pagesSrc))
       // competition must run over the FULL corpus the sharded runs consumed
-      // (compactDedup scaladoc) — extract text when the source carries html
-      val docs =
-        if (corpus.columns.contains("text")) corpus.select("url", "text")
-        else corpus.select(col("url"),
-          udf((h: Array[Byte]) => HtmlText.extract(h)).apply(col("html")).as("text"))
+      // (compactDedup scaladoc), as the text the pipeline's gate saw
+      val docs = KgPipeline.extract(loadPages(spark, pagesSrc)).select("url", "text")
       val v = graft.streaming.StreamingKg.compactDedup(spark, outDir, docs,
         minJaccard = opts("compact-dedup").toDouble,
         localProbe = !opts.contains("open-vocabulary"))
       println(v.map(v => s"[graft] dedup-compacted to snapshot v$v at $outDir")
         .getOrElse(s"[graft] nothing to compact at $outDir"))
-      spark.stop(); return
-    }
-    if (opts.contains("redrive")) {
-      // same bootstrap AND the same alignment-tier flags as a pipeline
-      // run: redriveFailed's contract is micro-batch-identical per-page
-      // semantics, so a tiered deployment passes its tiers here too —
-      // silently re-driving with tier-1-only linking would commit triples
-      // whose obj_canonical/obj_linked differ from the stream's
-      val (dims, client) = bootstrap(spark)
-      val v = graft.streaming.StreamingKg.redriveFailed(
-        spark, outDir, loadPages(spark, pagesSrc), dims, client,
-        fuzzyMinJaccard = opts.get("fuzzy").map(_.toDouble),
-        fuzzyStopGramMaxDf = opts.get("fuzzy-cap").map(_.toInt),
-        cosineMinSim = opts.get("cosine").map(_.toDouble),
-        cosineLshPrune = opts.get("cosine-lsh").map(parsePair),
-        broadcastTarget = !opts.contains("no-broadcast-done"))
-      println(v.map(v => s"[graft] re-drive committed snapshot v$v at $outDir")
-        .getOrElse(s"[graft] no failure log to re-drive at $outDir"))
       spark.stop(); return
     }
     if (opts.contains("rewrite")) {
@@ -150,10 +126,19 @@ object Main {
           s"--buckets range must sit in 0-${KgPipeline.UrlBuckets - 1}")
         (lo to hi): Seq[Int]
       })
-    if (opts.contains("snapshot")) {
+    if (opts.contains("redrive")) {
+      // the run's own Config: redriveFailed's contract is
+      // micro-batch-identical per-page semantics, so a tiered deployment's
+      // tiers apply here too — re-driving with tier-1-only linking would
+      // commit triples whose obj_canonical/obj_linked differ from the stream's
+      val v = graft.streaming.StreamingKg.redriveFailed(
+        spark, outDir, pages, dims, client, cfg)
+      println(v.map(v => s"[graft] re-drive committed snapshot v$v at $outDir")
+        .getOrElse(s"[graft] no failure log to re-drive at $outDir"))
+    } else {
       val v = KgPipeline.runAndCommitSnapshot(spark, pages, dims, client, outDir, cfg)
       println(s"[graft] committed snapshot v$v at $outDir")
-    } else KgPipeline.runAndCommit(spark, pages, dims, client, outDir, cfg)
+    }
     spark.stop()
   }
 
@@ -193,7 +178,6 @@ object Main {
       case "--partitions" :: v :: rest => parse(rest, acc + ("partitions" -> v))
       case "--salted" :: rest => parse(rest, acc + ("salted" -> "1"))
       case "--no-canonicalize" :: rest => parse(rest, acc + ("no-canonicalize" -> "1"))
-      case "--snapshot" :: rest => parse(rest, acc + ("snapshot" -> "1"))
       case "--dedup" :: v :: rest => parse(rest, acc + ("dedup" -> v))
       case "--fuzzy" :: v :: rest => parse(rest, acc + ("fuzzy" -> v))
       case "--fuzzy-cap" :: v :: rest => parse(rest, acc + ("fuzzy-cap" -> v))

@@ -150,6 +150,7 @@ object Similarity {
   def kmeansCentroids(embeddings: DataFrame, k: Int, iters: Int,
                       samplePermille: Int = 1000,
                       checkpointEvery: Int = 4): DataFrame = {
+    require(checkpointEvery > 0, s"checkpointEvery must be > 0, got $checkpointEvery")
     // Deterministic init: the k SMALLEST vec_ids (not `vec_id < k`, which
     // silently yields fewer/zero centroids when ids are sparse or hashed —
     // e.g. xxhash64-derived doc ids), cluster id = rank among those k.

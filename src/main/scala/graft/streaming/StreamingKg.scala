@@ -10,8 +10,9 @@ import graft.kg._
   *
   * The reference is pure batch (SURVEY §2.8), but a web-scale crawl is
   * naturally a stream of WARC segments: this module runs the same stage
-  * chain — extract → batched inference → lenient parse → alignment — as an
-  * incremental `readStream` over arriving page files. Stages were designed
+  * chain — extract → batched inference → lenient parse → alignment →
+  * hydration — as an incremental `readStream` over arriving page files, by
+  * calling KgPipeline's per-page stage functions. Stages were designed
   * stream-compatible from the start: every transform is either stateless
   * (map/mapPartitions/UDF) or a broadcast join, so the streaming plan is
   * the batch plan minus the two inherently-global steps:
@@ -49,14 +50,15 @@ object StreamingKg {
       .dropDuplicatesWithinWatermark("hashed_text")
 
   /** Streaming triple extraction: extract → [exact-dedup gate] →
-    * prompt-build → infer → parse → align → hydrate. Identical per-row
-    * semantics to the batch pipeline (same functions, including the prompt
-    * stage — stateless, so it streams). `dedupWatermark = Some(horizon)`
-    * inserts [[dedupPagesStream]] between extraction and inference — the
+    * prompt-build → infer → parse → align (tier 1) → hydrate. Identical
+    * per-row semantics to the batch pipeline (KgPipeline's stage functions,
+    * including the prompt stage — stateless, so it streams).
+    * `dedupWatermark = Some(horizon)` inserts [[dedupPagesStream]] between
+    * extraction and inference — the
     * streaming counterpart of the batch `Config.dedupMinJaccard` gate, so
     * re-fetched identical pages never reach the model.
     *
-    * Hydration is the batch pipeline's `Hydrator.hydratePrepared` verbatim
+    * Hydration is the batch pipeline's `KgPipeline.hydrate` verbatim
     * — stateless broadcast left joins against the prepared dim snapshot
     * (the window-dedup key build is CACHED, so micro-batches re-read the
     * materialized keys instead of re-running the dedup windows), so the
@@ -66,7 +68,8 @@ object StreamingKg {
     * text2graph/schema.py:441-447). The one batch-only step remaining is
     * global canonicalization, which is inherently cross-batch and runs in
     * [[compactCanonicalize]]; until then `obj_final = obj_canonical`, the
-    * same rule as the batch `canonicalize = false` path. */
+    * same rule as the batch `canonicalize = false` path
+    * (KgPipeline.uncanonicalized). */
   def triplesStream(pages: DataFrame, dims: Dims.Snapshot,
                     client: Inference.InferenceClient,
                     microBatch: Int = 200,
@@ -75,12 +78,10 @@ object StreamingKg {
                       java.sql.Timestamp.valueOf("2024-06-01 00:00:00"),
                     prebuiltAlias: Option[DataFrame] = None,
                     preparedDims: Option[Hydrator.Prepared] = None): DataFrame = {
-    val rawParsed = rawParsedStream(pages, dims, client, microBatch, dedupWatermark)
-    val parsed = PostProcess.explodeParsed(rawParsed)
-    val aligned = Linker.align(parsed,
-        prebuiltAlias.getOrElse(Linker.aliasDim(dims)))
-      .withColumn("obj_final", col("obj_canonical"))
-      .withColumn("entity_cluster_id", xxhash64(col("obj_kind"), col("obj_canonical")))
+    val parsed = PostProcess.explodeParsed(
+      rawParsedStream(pages, dims, client, microBatch, dedupWatermark))
+    val aligned = KgPipeline.alignTiers(parsed,
+      prebuiltAlias.getOrElse(Linker.aliasDim(dims)), KgPipeline.Config())
     // cache the prepared (window-deduped) hydration keys: the static side
     // of a stream-static join is re-evaluated every micro-batch, and
     // without the cache each batch would re-run the 4-tier strat union +
@@ -92,15 +93,14 @@ object StreamingKg {
     // `unpersist()` it when the query stops (the sink path's
     // FailureSink.release() does exactly this); the default exists for
     // short-lived jobs whose session ends with the query.
-    Hydrator.hydratePrepared(aligned,
-        preparedDims.getOrElse(Hydrator.prepare(dims).cached()), jobStart)
-      .select(KgPipeline.TripleColumns.map(col): _*)
+    KgPipeline.hydrate(KgPipeline.uncanonicalized(aligned),
+      preparedDims.getOrElse(Hydrator.prepare(dims).cached()), jobStart)
   }
 
   /** The streaming pipeline's PRE-explode stage: extract → [exact-dedup
     * gate] → prompt-build → infer → lenient parse, keeping the per-page
     * `parse_status` discriminator (the batch pipeline's persisted stage
-    * boundary, PostProcess.withParsed). Feed this to
+    * boundary, KgPipeline.inferParsed). Feed this to
     * [[snapshotSinkWithFailures]] when the stream must carry the failure
     * bookkeeping; [[triplesStream]] is this plus explode-align-hydrate. */
   def rawParsedStream(pages: DataFrame, dims: Dims.Snapshot,
@@ -108,18 +108,13 @@ object StreamingKg {
                       microBatch: Int = 200,
                       dedupWatermark: Option[String] = None,
                       promptDicts: Option[Seq[Inference.HandlerDict]] = None): DataFrame = {
-    // shared bounded bootstrap (Inference.promptDictsFromDims guards the
-    // driver collect); an open-vocabulary deployment passes its capped
-    // top-df dictionary slice via promptDicts instead
-    val prompting = promptDicts
-      .getOrElse(Inference.promptDictsFromDims(dims))
-    val extracted0 = pages
-      .withColumn("text", udf((h: Array[Byte]) => HtmlText.extract(h)).apply(col("html")))
-      .withColumn("hashed_text", sha2(col("text"), 256))
+    // promptDicts = None: the shared bounded bootstrap
+    // (Inference.promptDictsFromDims guards the driver collect); an
+    // open-vocabulary deployment passes its capped top-df dictionary slice
+    val extracted0 = KgPipeline.extract(pages)
     val extracted = dedupWatermark
       .map(w => dedupPagesStream(extracted0, w)).getOrElse(extracted0)
-    PostProcess.withParsed(
-      Inference.run(extracted, client, microBatch, prompting).toDF())
+    KgPipeline.inferParsed(extracted, dims, client, microBatch, promptDicts)
   }
 
   /** Exactly-once micro-batch commit into the snapshot store: a restarted
@@ -182,9 +177,10 @@ object StreamingKg {
     * committed together in ONE atomic snapshot (exactly-once via the
     * batch_id watermark: a replayed micro-batch re-commits neither).
     *
-    * The optional alignment tiers mirror the batch `KgPipeline.Config`
-    * (fuzzyAlignMinJaccard / fuzzyStopGramMaxDf / cosineAlignMinSim /
-    * cosineAlignLshPrune) and run INSIDE each micro-batch: every tier is a
+    * `cfg` is the batch pipeline's Config; the sink reads its per-page
+    * fields — alignment tiers (KgPipeline.alignTiers), `jobStart`, and the
+    * prebuilt alias/hydration dims when given (the caller then owns their
+    * lifetime). The tiers run INSIDE each micro-batch: every tier is a
     * per-name argmax against the STATIC dictionary — independent of which
     * other names share the batch — so micro-batch scoping changes nothing
     * vs the batch pipeline on the same pages (parity-tested in
@@ -192,28 +188,24 @@ object StreamingKg {
     * [[compactCanonicalize]]), the tiers need no cross-batch state. */
   def snapshotSinkWithFailures(rawParsed: DataFrame, dir: String,
                                dims: Dims.Snapshot,
-                               jobStart: java.sql.Timestamp =
-                                 java.sql.Timestamp.valueOf("2024-06-01 00:00:00"),
-                               fuzzyMinJaccard: Option[Double] = None,
-                               fuzzyStopGramMaxDf: Option[Int] = None,
-                               cosineMinSim: Option[Double] = None,
-                               cosineLshPrune: Option[(Int, Int)] = None): FailureSink = {
+                               cfg: KgPipeline.Config = KgPipeline.Config()): FailureSink = {
     // bootstrap once per query, reused by every micro-batch closure — the
     // static side of every stream-static stage (hydration keys, alias
     // table, each tier's DERIVED dictionary frame: gram arrays,
     // gram-bucket embeddings, and the fuzzy tier's stop-gram list — all
     // pure functions of the dictionary, never the batch) is cached here,
     // or each micro-batch would re-run the identical dictionary
-    // featurization. Released by FailureSink.release() when the owner is
-    // done with the query.
-    val prepared = Hydrator.prepare(dims).cached()
-    val alias = Linker.aliasDim(dims).cache()
-    val fuzzyDict = fuzzyMinJaccard
-      .map(_ => Linker.fuzzyDict(alias).persist())
-    val fuzzyStop = for { d <- fuzzyDict; cap <- fuzzyStopGramMaxDf }
-      yield Linker.stopGrams(d, cap).persist()
-    val cosineDict = cosineMinSim
-      .map(_ => Linker.cosineDict(alias).persist())
+    // featurization. The caches built here are released by
+    // FailureSink.release() when the owner is done with the query.
+    val owned = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    def own(df: DataFrame): DataFrame = { val p = df.persist(); owned += p; p }
+    val ownedPrepared = Option.when(cfg.preparedDims.isEmpty)(Hydrator.prepare(dims).cached())
+    val prepared = cfg.preparedDims.orElse(ownedPrepared).get
+    val alias = cfg.prebuiltAlias.getOrElse(own(Linker.aliasDim(dims)))
+    val fuzzyDict = cfg.fuzzyAlignMinJaccard.map(_ => own(Linker.fuzzyDict(alias)))
+    val fuzzyStop = for { d <- fuzzyDict; cap <- cfg.fuzzyStopGramMaxDf }
+      yield own(Linker.stopGrams(d, cap))
+    val cosineDict = cfg.cosineAlignMinSim.map(_ => own(Linker.cosineDict(alias)))
     val writer = rawParsed.writeStream.outputMode("append")
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
         val b = batch.toDF().persist()
@@ -222,27 +214,12 @@ object StreamingKg {
         // batch frame, so a long-running stream holds only the bootstrap
         val batchCached = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
         try {
-          val tier1 = Linker.align(PostProcess.explodeParsed(b), alias)
-          val tier2 = fuzzyMinJaccard
-            .map(Linker.alignFuzzy(tier1, alias, _, fuzzyStopGramMaxDf,
-              prebuiltDict = fuzzyDict, prebuiltStopGrams = fuzzyStop))
-            .getOrElse(tier1)
-          val tier3 = cosineMinSim
-            .map(t => Linker.alignCosine(tier2, alias, t,
-              lshPrune = cosineLshPrune, prebuiltDict = cosineDict,
-              registerCached = batchCached += _))
-            .getOrElse(tier2)
-          val aligned = tier3
-            .withColumn("obj_final", col("obj_canonical"))
-            .withColumn("entity_cluster_id",
-              xxhash64(col("obj_kind"), col("obj_canonical")))
-          val triples = Hydrator.hydratePrepared(aligned, prepared, jobStart)
-            .select(KgPipeline.TripleColumns.map(col): _*)
-          val failed = b
-            .filter(col("parse_status") =!= PostProcess.StatusOk)
-            .select(col("url"),
-              PostProcess.failedStage(col("parse_status")).as("failed_stage"))
-          commitBatchTables(dir, Map("triples" -> triples, "failed" -> failed), batchId)
+          val aligned = KgPipeline.alignTiers(PostProcess.explodeParsed(b), alias, cfg,
+            fuzzyDict, fuzzyStop, cosineDict, registerCached = batchCached += _)
+          val triples = KgPipeline.hydrate(KgPipeline.uncanonicalized(aligned),
+            prepared, cfg.jobStart)
+          commitBatchTables(dir,
+            Map("triples" -> triples, "failed" -> KgPipeline.failedUrls(b)), batchId)
         } finally {
           batchCached.foreach(_.unpersist(blocking = false))
           b.unpersist()
@@ -250,10 +227,8 @@ object StreamingKg {
         ()
       }
     FailureSink(writer, () => {
-      prepared.unpersist()
-      alias.unpersist(blocking = false)
-      (fuzzyDict.toSeq ++ fuzzyStop ++ cosineDict)
-        .foreach(_.unpersist(blocking = false))
+      ownedPrepared.foreach(_.unpersist())
+      owned.foreach(_.unpersist(blocking = false))
     })
   }
 
@@ -269,8 +244,9 @@ object StreamingKg {
     *  1. read the accumulated `failed` log and drop every url that already
     *     has triples in the store (healed by an earlier re-drive or a
     *     later append) — those clear from the log unconditionally;
-    *  2. re-run the batch pipeline (`canonicalize = false` + the same
-    *     alignment tiers as the sink — identical per-page semantics to a
+    *  2. re-run the batch pipeline under `cfg` — the same Config the sink
+    *     or the batch run used — with canonicalization, the dedup gate and
+    *     bucket sharding off (identical per-page semantics to a
     *     micro-batch) over the remaining urls' pages from `pages`;
     *  3. commit healed pages' triples (APPEND) and the rewritten failure
     *     log (REPLACE: fresh failure rows for pages that failed again,
@@ -279,25 +255,18 @@ object StreamingKg {
     *     re-running converges (exactly-once via determinism, like every
     *     commit in this store).
     *
+    * The re-drive url set joins as a pinned broadcast or AQE-sized as
+    * `cfg.broadcastDone` says: a broadcast is right while the failure log
+    * is incident-sized, but a corpus-wide outage makes it
+    * page-cardinality, and a pinned broadcast cannot be demoted by AQE.
+    *
     * Returns the committed version; None when the store has no failure
     * log (absent table, or already emptied by a prior re-drive — the job
     * is a read-only no-op then, committing nothing). A fully healed run
     * leaves the `failed` table with ZERO rows. */
-  /** @param broadcastTarget pins the re-drive url set as a broadcast join
-    *        build side — right while the failure log is incident-sized.
-    *        A corpus-wide outage makes the log page-cardinality, and a
-    *        pinned broadcast cannot be demoted by AQE — pass `false` for
-    *        a plain semi-join AQE sizes from runtime stats (the
-    *        KgPipeline.broadcastDone duality, same rationale). */
   def redriveFailed(spark: SparkSession, dir: String, pages: DataFrame,
                     dims: Dims.Snapshot, client: Inference.InferenceClient,
-                    jobStart: java.sql.Timestamp =
-                      java.sql.Timestamp.valueOf("2024-06-01 00:00:00"),
-                    fuzzyMinJaccard: Option[Double] = None,
-                    fuzzyStopGramMaxDf: Option[Int] = None,
-                    cosineMinSim: Option[Double] = None,
-                    cosineLshPrune: Option[(Int, Int)] = None,
-                    broadcastTarget: Boolean = true): Option[Int] = {
+                    cfg: KgPipeline.Config = KgPipeline.Config()): Option[Int] = {
     import graft.sources.SnapshotStore
     val readVersion = SnapshotStore.currentVersion(spark, dir)
     SnapshotStore.read(spark, dir, "failed", Some(readVersion).filter(_ > 0))
@@ -313,26 +282,20 @@ object StreamingKg {
       // pages to re-run: target urls the corpus still has. Target urls the
       // corpus LOST keep their old log rows — clearing them silently would
       // erase the only record that extraction never succeeded.
-      val targetSide = if (broadcastTarget) broadcast(target) else target
-      val redrive = pages.join(targetSide, Seq("url"), "left_semi")
+      val redrive = pages.join(KgPipeline.urlSet(target, cfg), Seq("url"), "left_semi")
       val res = KgPipeline.run(spark, redrive, dims, client,
-        KgPipeline.Config(canonicalize = false, jobStart = jobStart,
-          fuzzyAlignMinJaccard = fuzzyMinJaccard,
-          fuzzyStopGramMaxDf = fuzzyStopGramMaxDf,
-          cosineAlignMinSim = cosineMinSim,
-          cosineAlignLshPrune = cosineLshPrune))
+        cfg.copy(canonicalize = false, dedupMinJaccard = None, buckets = None))
       val stillMissing = target
         .join(pages.select("url").distinct(), Seq("url"), "left_anti")
       val carried = failed
         .join(stillMissing, Seq("url"), "left_semi")
         .groupBy("url").agg(min("failed_stage").as("failed_stage"))
       val newLog = res.failedUrls.unionByName(carried)
-      val healedTriples = res.triples.select(KgPipeline.TripleColumns.map(col): _*)
       // requireVersion: a micro-batch appending to `failed` between our
       // read and this publish must fail the rewrite (re-run the job), not
       // silently vanish under the replaced log
       val v = SnapshotStore.commitMixed(spark, dir,
-        append = Map("triples" -> healedTriples),
+        append = Map("triples" -> res.triples),
         replace = Map("failed" -> newLog),
         meta = Map("compaction" -> "redrive"),
         requireVersion = Some(readVersion))
@@ -443,12 +406,9 @@ object StreamingKg {
       // persist so the parquet scan runs once, not once per action
       val triples = triples0
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val docs = corpus.select(col("url"), col("text"))
-        .withColumn("doc_id", xxhash64(col("url")))
+      val docs = KgPipeline.withDocId(corpus.select(col("url"), col("text")))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val losers = graft.ops.Dedup
-        .dedupe(docs.select("doc_id", "text"), minJaccard, localProbe)
-        .filter(!col("keep")).select(col("doc_id").as("drop_id"))
+      val losers = KgPipeline.dedupLosers(docs, minJaccard, localProbe)
       // loser urls are duplicate-cluster members only — tiny next to the
       // corpus, so the rewrite anti-join broadcasts under AQE
       val loserUrls = docs.join(losers, docs("doc_id") === losers("drop_id"))

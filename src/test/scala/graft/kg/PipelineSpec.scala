@@ -347,48 +347,11 @@ class KgPipelineSpec extends SparkSpec {
     assert(res2.lineage.filter(col("stage") === "dedup").count() === 0)
   }
 
-  test("resume: second run is incremental and idempotent") {
-    val outDir = java.nio.file.Files.createTempDirectory("kgresume").toString
-    val pages = Pages.fixtures(spark)
-    KgPipeline.runAndCommit(spark, pages, dims, client, outDir,
-      KgPipeline.Config(numPartitions = 4))
-    val n1 = spark.read.parquet(s"$outDir/triples").count()
-    // re-run with the same checkpoint: all urls done → no new rows
-    KgPipeline.runAndCommit(spark, pages, dims, client, outDir,
-      KgPipeline.Config(numPartitions = 4))
-    val n2 = spark.read.parquet(s"$outDir/triples").count()
-    assert(n1 === n2)
-  }
-
-  test("resume after partial failure: union of runs equals one clean run") {
-    val cleanDir = java.nio.file.Files.createTempDirectory("kgclean").toString
-    val partialDir = java.nio.file.Files.createTempDirectory("kgpartial").toString
-    val pages = Pages.fixtures(spark)
-    // ground truth: one clean run over everything
-    KgPipeline.runAndCommit(spark, pages, dims, client, cleanDir,
-      KgPipeline.Config(numPartitions = 4))
-    // simulate a crashed first attempt that committed only 2 urls
-    val firstHalf = pages.filter(
-      col("url").isin("https://fixtures.graft/sauk", "https://fixtures.graft/gold"))
-    KgPipeline.runAndCommit(spark, firstHalf, dims, client, partialDir,
-      KgPipeline.Config(numPartitions = 4))
-    // recovery: re-run over the FULL input with the same checkpoint
-    KgPipeline.runAndCommit(spark, pages, dims, client, partialDir,
-      KgPipeline.Config(numPartitions = 4))
-    val key = Seq("url", "subj_name", "predicate", "obj_name")
-    val clean = spark.read.parquet(s"$cleanDir/triples")
-      .select(key.map(col): _*).collect().map(_.toSeq).toSet
-    val recovered = spark.read.parquet(s"$partialDir/triples")
-      .select(key.map(col): _*).collect().map(_.toSeq).toSet
-    assert(recovered === clean)
-  }
-
-  test("infer/parse failures: lineage counts them; failed urls re-driven after heal (NA semantics)") {
+  test("infer/parse failures: lineage counts them; failedUrls names each failed stage (NA semantics)") {
     // The reference keeps failed documents visible as "NA" placeholder rows
     // (chtc/preprocess_extraction_direct.py:99-110); here the equivalents
-    // are the infer/parse lineage stages + Result.failedUrls + the
-    // done-set exclusion that makes a failed page re-drivable.
-    val outDir = java.nio.file.Files.createTempDirectory("kgfail").toString
+    // are the infer/parse lineage stages + Result.failedUrls (the commit's
+    // done-set exclusion and re-drive after heal: SnapshotStoreSpec).
     def page(u: String, t: String) =
       (u, java.sql.Timestamp.valueOf("2024-01-01 00:00:00"),
         HtmlText.render(t, "en"), t, "en")
@@ -407,27 +370,7 @@ class KgPipelineSpec extends SparkSpec {
     assert(r1.failedUrls.collect()
       .map(r => r.getString(0) -> r.getAs[String]("failed_stage")).toMap ===
       Map("https://t/fail-infer" -> "infer", "https://t/fail-parse" -> "parse"))
-    // a legitimately-empty page is NOT a failure: zero triples, status ok
     r1.cleanup()
-
-    KgPipeline.runAndCommit(spark, pages, dims, new HealToggle.HealingClient,
-      outDir, KgPipeline.Config(numPartitions = 2))
-    val done1 = spark.read.parquet(s"$outDir/checkpoint/done")
-      .select("url").collect().map(_.getString(0)).toSet
-    assert(done1 === Set("https://t/ok")) // failures never marked done
-    assert(spark.read.parquet(s"$outDir/triples").count() === 1L)
-
-    // endpoint heals → the next incremental run re-drives ONLY the failed
-    // urls (ok is behind the done-set) and marks them done
-    HealToggle.healed = true
-    KgPipeline.runAndCommit(spark, pages, dims, new HealToggle.HealingClient,
-      outDir, KgPipeline.Config(numPartitions = 2))
-    val done2 = spark.read.parquet(s"$outDir/checkpoint/done")
-      .select("url").collect().map(_.getString(0)).toSet
-    assert(done2 === Set("https://t/ok", "https://t/fail-infer", "https://t/fail-parse"))
-    val t2 = spark.read.parquet(s"$outDir/triples")
-    assert(t2.count() === 3L)
-    assert(t2.filter(col("url") === "https://t/ok").count() === 1L) // not re-run
   }
 
   test("legitimately-empty page is ok, not an infer/parse failure") {
@@ -468,48 +411,6 @@ class KgPipelineSpec extends SparkSpec {
     assert(keyedPinned.filter(col("join_norm") === "shakopee fm").count() === 1L)
   }
 
-  test("bucket-sharded resume: disjoint bucket runs union to one full run; done layout prunes") {
-    val outFull = java.nio.file.Files.createTempDirectory("kgbucketfull").toString
-    val outShard = java.nio.file.Files.createTempDirectory("kgbucketshard").toString
-    val pages = Pages.fixtures(spark)
-    // canonicalize = false: sharding is exact for the per-page stages;
-    // canonicalization is corpus-global by nature and runs per-shard in
-    // bucket mode (cross-shard variants collapse at compaction — the
-    // Config.buckets scaladoc scope), so the parity claim is on the
-    // per-page path
-    KgPipeline.runAndCommit(spark, pages, dims, client, outFull,
-      KgPipeline.Config(numPartitions = 2, canonicalize = false))
-    // the same corpus as two disjoint bucket shards (the 10^12-url
-    // operating mode: each run broadcasts only its shard's done subset)
-    KgPipeline.runAndCommit(spark, pages, dims, client, outShard,
-      KgPipeline.Config(numPartitions = 2, canonicalize = false,
-        buckets = Some(0 until 32)))
-    KgPipeline.runAndCommit(spark, pages, dims, client, outShard,
-      KgPipeline.Config(numPartitions = 2, canonicalize = false,
-        buckets = Some(32 until 64)))
-    def rows(dir: String) = spark.read.parquet(s"$dir/triples")
-      .select("url", "subj_name", "predicate", "obj_name", "obj_final")
-      .collect().map(_.toSeq).toSet
-    assert(rows(outShard) === rows(outFull))
-    def doneUrls(dir: String) = spark.read.parquet(s"$dir/checkpoint/done")
-      .select("url").collect().map(_.getString(0)).toSet
-    assert(doneUrls(outShard) === doneUrls(outFull))
-    // the done-set landed url_bucket-partitioned, and a sharded read is a
-    // PARTITION filter (pruned at the scan, not a post-scan row filter)
-    assert(new java.io.File(s"$outShard/checkpoint/done").listFiles()
-      .exists(_.getName.startsWith("url_bucket=")))
-    val sharded = spark.read.parquet(s"$outShard/checkpoint/done")
-      .filter(col("url_bucket").isin((0L until 32L): _*)).select("url")
-    val plan = sharded.queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters: [") && plan.contains("url_bucket"))
-    // re-running a shard is incremental (its urls are behind the done-set)
-    val n1 = spark.read.parquet(s"$outShard/triples").count()
-    KgPipeline.runAndCommit(spark, pages, dims, client, outShard,
-      KgPipeline.Config(numPartitions = 2, canonicalize = false,
-        buckets = Some(0 until 32)))
-    assert(spark.read.parquet(s"$outShard/triples").count() === n1)
-  }
-
   test("snapshot-store sharded resume: manifest prunes done files to the shard; union parity") {
     import graft.sources.SnapshotStore
     val full = java.nio.file.Files.createTempDirectory("snapfull").toString
@@ -533,7 +434,7 @@ class KgPipelineSpec extends SparkSpec {
     assert(doneUrls(shard) === doneUrls(full))
     // the done table staged url_bucket-partitioned, so the MANIFEST itself
     // prunes a sharded read's file list — the store-level counterpart of
-    // the parquet checkpoint's PartitionFilters evidence: the shard's
+    // a parquet scan's PartitionFilters: the shard's
     // marker set keeps a strict, non-empty subset of the files
     val totalFiles = SnapshotStore.fileCount(spark, shard, "done")
     val markers = (0 until 32).map(b => s"url_bucket=$b/")
@@ -831,30 +732,60 @@ class KgPipelineSpec extends SparkSpec {
   }
 
   test("AQE-managed resume anti-join equals the broadcast-hinted path") {
-    val outDir = java.nio.file.Files.createTempDirectory("kgdonedual").toString
+    import graft.sources.SnapshotStore
     val pages = Pages.fixtures(spark)
     val firstHalf = pages.filter(
       col("url").isin("https://fixtures.graft/sauk", "https://fixtures.graft/gold"))
-    KgPipeline.runAndCommit(spark, firstHalf, dims, client,
-      outDir, KgPipeline.Config(numPartitions = 4))
-    val base = KgPipeline.Config(numPartitions = 4,
-      checkpointDir = Some(s"$outDir/checkpoint"))
-    val hinted = KgPipeline.run(spark, pages, dims, client, base)
-    val aqe = KgPipeline.run(spark, pages, dims, client,
-      base.copy(broadcastDone = false))
+    def halfDone() = {
+      val dir = java.nio.file.Files.createTempDirectory("kgdonedual").toString
+      KgPipeline.runAndCommitSnapshot(spark, firstHalf, dims, client, dir,
+        KgPipeline.Config(numPartitions = 4))
+      dir
+    }
+    val hintedDir = halfDone()
+    val aqeDir = halfDone()
+    val base = KgPipeline.Config(numPartitions = 4)
+    val aqeCfg = base.copy(broadcastDone = false)
     // hinted path pins one more broadcast (the done-set) than the AQE path,
     // which carries no hint and lets AQE size the build side — the only
     // posture that survives a page-cardinality done-set
     import org.apache.spark.sql.catalyst.plans.logical.ResolvedHint
     def nHints(df: org.apache.spark.sql.DataFrame) =
       df.queryExecution.analyzed.collect { case h: ResolvedHint => h }.size
-    assert(nHints(hinted.triples) === nHints(aqe.triples) + 1)
+    assert(nHints(KgPipeline.pending(spark, pages, hintedDir, base)) ===
+      nHints(KgPipeline.pending(spark, pages, aqeDir, aqeCfg)) + 1)
+    KgPipeline.runAndCommitSnapshot(spark, pages, dims, client, hintedDir, base)
+    KgPipeline.runAndCommitSnapshot(spark, pages, dims, client, aqeDir, aqeCfg)
     val key = Seq("url", "subj_name", "predicate", "obj_name")
-    val a = hinted.triples.select(key.map(col): _*).collect().map(_.toSeq).toSet
-    val b = aqe.triples.select(key.map(col): _*).collect().map(_.toSeq).toSet
-    assert(a === b)
-    // both resumed runs process exactly the not-yet-done pages
-    assert(!a.exists(_.head == "https://fixtures.graft/sauk"))
+    def stored(dir: String) = SnapshotStore.read(spark, dir, "triples").get
+      .select(key.map(col): _*).collect().map(_.toSeq).toSet
+    assert(stored(hintedDir) === stored(aqeDir))
+    // both resumed runs process exactly the not-yet-done pages: the second
+    // snapshot adds no row for an already-done url
+    def sauk(dir: String, v: Option[Int]) = SnapshotStore.read(spark, dir, "triples", v)
+      .get.filter(col("url") === "https://fixtures.graft/sauk").count()
+    for (dir <- Seq(hintedDir, aqeDir)) assert(sauk(dir, None) === sauk(dir, Some(1)))
+  }
+
+  /** `mapFrames` must send each field's frame to the same field: each
+    * field gets a distinct image, looked up by reference. */
+  private def assertFieldWise(fields: Seq[org.apache.spark.sql.DataFrame],
+                              map: (org.apache.spark.sql.DataFrame =>
+                                org.apache.spark.sql.DataFrame) => Product): Unit = {
+    val images = fields.map(_.alias("mapped"))
+    val mapped = map(d => images(fields.indexWhere(_ eq d))).productIterator.toSeq
+    assert(mapped.size === images.size)
+    mapped.zip(images).foreach { case (m, i) => assert(m.asInstanceOf[AnyRef] eq i) }
+  }
+
+  test("Dims.Snapshot.mapFrames sends each dim to its own field") {
+    assertFieldWise(Seq(dims.stratDim, dims.mineralDim, dims.intervalDim,
+      dims.gazetteerDim, dims.stratGpsDim, dims.lithDim), dims.mapFrames)
+  }
+
+  test("Hydrator.Prepared.mapFrames sends each keyed dim to its own field") {
+    val p = Hydrator.prepare(dims)
+    assertFieldWise(Seq(p.stratKeyed, p.mineralKeyed, p.gaz, p.lithKeyed), p.mapFrames)
   }
 }
 

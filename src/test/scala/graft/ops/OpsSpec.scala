@@ -284,6 +284,15 @@ class SimilaritySpec extends SparkSpec {
     }
   }
 
+  test("kmeans rejects a non-positive checkpoint interval") {
+    // i % 0 used to surface as an ArithmeticException mid-training
+    Seq(0, -1).foreach { every =>
+      intercept[IllegalArgumentException] {
+        Similarity.kmeansCentroids(embs, k = 4, iters = 2, checkpointEvery = every)
+      }
+    }
+  }
+
   test("ivf over trained codebook equals brute force when every cell is probed") {
     val brute = Similarity.bruteTopK(embs, 0, 10).collect()
       .map(r => (r.getLong(0), r.getDouble(1)))

@@ -119,7 +119,8 @@ class SnapshotStoreSpec extends SparkSpec {
         HtmlText.render(t, "en"), t, "en")
     val pages = Seq(
       page("https://t/ok", "Shakopee Formation in Minnesota."),
-      page("https://t/fail-infer", "Text one."))
+      page("https://t/fail-infer", "Text one."),
+      page("https://t/fail-parse", "Text two."))
       .toDF("url", "warc_ts", "html", "text", "lang")
     graft.kg.HealToggle.healed = false
     val v1 = KgPipeline.runAndCommitSnapshot(spark, pages, dims,
@@ -128,13 +129,17 @@ class SnapshotStoreSpec extends SparkSpec {
     // the atomic snapshot's done table never claims the failed page
     assert(SnapshotStore.read(spark, dir, "done").get
       .collect().map(_.getString(0)).toSet === Set("https://t/ok"))
+    assert(SnapshotStore.read(spark, dir, "triples").get.count() === 1L)
+    // endpoint heals → the next incremental run re-drives ONLY the failed
+    // urls (ok is behind the done-set) and marks them done
     graft.kg.HealToggle.healed = true
     KgPipeline.runAndCommitSnapshot(spark, pages, dims,
       new graft.kg.HealToggle.HealingClient, dir, KgPipeline.Config(numPartitions = 2))
     assert(SnapshotStore.read(spark, dir, "done").get
       .collect().map(_.getString(0)).toSet ===
-      Set("https://t/ok", "https://t/fail-infer"))
+      Set("https://t/ok", "https://t/fail-infer", "https://t/fail-parse"))
     val triples = SnapshotStore.read(spark, dir, "triples").get
+    assert(triples.count() === 3L)
     assert(triples.filter(col("url") === "https://t/fail-infer").count() === 1L)
     assert(triples.filter(col("url") === "https://t/ok").count() === 1L) // not re-run
   }
@@ -186,12 +191,13 @@ class SnapshotStoreSpec extends SparkSpec {
       .select(key.map(col): _*).collect().map(_.toSeq).toSet
     assert(recovered === clean)
 
-    // idempotent: everything done => third run appends nothing
+    // idempotent: everything done => third run appends nothing (row counts,
+    // not just row sets: a duplicate append would hide in a set)
     val v3 = KgPipeline.runAndCommitSnapshot(spark, pages, dims, client, dir,
       KgPipeline.Config(numPartitions = 4))
     val after = SnapshotStore.read(spark, dir, "triples", Some(v3)).get
-      .select(key.map(col): _*).collect().map(_.toSeq).toSet
-    assert(after === clean)
+    assert(after.select(key.map(col): _*).collect().map(_.toSeq).toSet === clean)
+    assert(after.count() === SnapshotStore.read(spark, dir, "triples", Some(v2)).get.count())
     // done set at head covers every fixture url exactly once
     val done = SnapshotStore.read(spark, dir, "done").get
       .collect().map(_.getString(0))

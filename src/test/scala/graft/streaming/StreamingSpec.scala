@@ -196,21 +196,31 @@ class StreamingSpec extends SparkSpec {
     val pagesDir = java.nio.file.Files.createTempDirectory("tiersrc").toString
     val storeDir = java.nio.file.Files.createTempDirectory("tiersink").toString
     val ckpt = java.nio.file.Files.createTempDirectory("tierckpt").toString
-    // dim knows only "Waldron Shale"; tier-1 misses the misspelling, the
-    // cosine tier links it (sim 0.859 >= 0.8) — inside a micro-batch
-    val text = "The Waldron Shael is exposed near Minnesota."
-    Seq(("https://t/tier-stream",
-        java.sql.Timestamp.valueOf("2024-01-01 00:00:00"),
-        HtmlText.render(text, "en"), text, "en"))
+    // dim knows only "Waldron Shale" and "Black Rock Formation"; tier-1
+    // misses both misspellings. "Blace Rock Formation" links only through
+    // the fuzzy tier (char-3-gram Jaccard 0.75 >= 0.7, candidates through
+    // the prebuilt stop-gram list; its best cosine is 0.79 < 0.8);
+    // "Waldron Shael" only through the cosine tier (Jaccard 0.69 < 0.7,
+    // sim 0.859 >= 0.8) — all inside a micro-batch. The second page fails inference until the transport
+    // heals, so the re-drive runs the same tiers over it.
+    def page(u: String, t: String) =
+      (u, java.sql.Timestamp.valueOf("2024-01-01 00:00:00"),
+        HtmlText.render(t, "en"), t, "en")
+    Seq(
+      page("https://t/tier-stream",
+        "The Waldron Shael and the Blace Rock Formation are exposed near Minnesota."),
+      page("https://t/tier-redrive/fail-infer",
+        "The Blace Rock Formation overlies the Waldron Shael in Minnesota."))
       .toDF("url", "warc_ts", "html", "text", "lang")
       .write.mode("overwrite").parquet(pagesDir)
-    def tierClient = Inference.defaultClient(
-      Dims.pinnedStrat.map(_.strat_name).toArray :+ "Waldron Shael",
-      Dims.gazetteer.map(_.name).toArray, Array())
+    def tierClient = new TierClient(Array("Waldron Shael", "Blace Rock Formation"))
+    val cfg = KgPipeline.Config(numPartitions = 2, canonicalize = false,
+      fuzzyAlignMinJaccard = Some(0.7), fuzzyStopGramMaxDf = Some(2),
+      cosineAlignMinSim = Some(0.8))
+    graft.kg.HealToggle.healed = false
     val raw = StreamingKg.rawParsedStream(
       StreamingKg.pagesStream(spark, pagesDir), dims, tierClient)
-    val sink = StreamingKg.snapshotSinkWithFailures(raw, storeDir, dims,
-      cosineMinSim = Some(0.8))
+    val sink = StreamingKg.snapshotSinkWithFailures(raw, storeDir, dims, cfg)
     try {
       val q = sink.writer
         .option("checkpointLocation", ckpt)
@@ -222,16 +232,25 @@ class StreamingSpec extends SparkSpec {
     assert(on.getAs[Boolean]("obj_linked"))
     assert(on.getAs[String]("obj_final") === "Waldron Shale")
     assert(on.getAs[Long]("strat_name_id") === 4260L)
+    val fz = streamed.filter(col("obj_name") === "Blace Rock Formation").collect().head
+    assert(fz.getAs[Boolean]("obj_linked"))
+    assert(fz.getAs[String]("obj_final") === "Black Rock Formation")
     // exact parity with the batch pipeline on the same pages: the tiers
     // are per-name functions of the static dictionary, so micro-batch
     // scoping is semantics-free (canonicalization stays in compaction)
-    val batch = KgPipeline.run(spark,
-      spark.read.parquet(pagesDir), dims, tierClient,
-      KgPipeline.Config(numPartitions = 2, canonicalize = false,
-        cosineAlignMinSim = Some(0.8))).triples
+    val okPages = spark.read.parquet(pagesDir).filter(col("url") === "https://t/tier-stream")
+    val batch = KgPipeline.run(spark, okPages, dims, tierClient, cfg).triples
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.select(KgPipeline.TripleColumns.map(col): _*).collect().map(_.toSeq).toSet
     assert(rows(streamed) === rows(batch))
+    // re-drive under the same Config: the store converges to the batch
+    // pipeline's rows over both pages, tiers included
+    graft.kg.HealToggle.healed = true
+    val allPages = spark.read.parquet(pagesDir)
+    assert(StreamingKg.redriveFailed(spark, storeDir, allPages, dims, tierClient, cfg).nonEmpty)
+    assert(SnapshotStore.read(spark, storeDir, "failed").forall(_.count() === 0L))
+    val healthy = KgPipeline.run(spark, allPages, dims, tierClient, cfg).triples
+    assert(rows(SnapshotStore.read(spark, storeDir, "triples").get) === rows(healthy))
   }
 
   test("compaction: cross-batch surface variants collapse to one canonical entity") {
@@ -559,4 +578,18 @@ class StreamingSpec extends SparkSpec {
     assert(closed.head.session_value === 3.0)
     assert(closed.head.duration_secs === 600)
   }
+}
+
+/** The tier tests' client: the heuristic client over the pinned names plus
+  * `variants`, failing inference like HealToggle.HealingClient until the
+  * toggle heals. */
+final class TierClient(variants: Array[String]) extends Inference.InferenceClient {
+  private val inner = Inference.defaultClient(
+    Dims.pinnedStrat.map(_.strat_name).toArray ++ variants,
+    Dims.gazetteer.map(_.name).toArray, Array())
+  val modelId = inner.modelId
+  def infer(batch: Seq[Inference.Request]): Seq[String] =
+    inner.infer(batch).zip(batch).map { case (raw, r) =>
+      if (!graft.kg.HealToggle.healed && r.url.endsWith("/fail-infer")) "" else raw
+    }
 }
