@@ -10,7 +10,8 @@ import org.apache.spark.sql.functions._
   *   (mapPartitions) → lenient parse/explode → alignment tiers
   *   → connected-components canonicalization → hydration joins
   *   → triples table [+ RDF materialization] + per-partition lineage rows
-  *   → one atomic snapshot commit (graft.sources.SnapshotStore).
+  *   → one atomic snapshot commit (graft.sources.SnapshotStore); the
+  *   triples and done tables stage one file per url_bucket per commit.
   *
   * Each per-page step is a plain function here ([[extract]],
   * [[inferParsed]], [[alignTiers]], [[uncanonicalized]], [[hydrate]],
@@ -439,16 +440,17 @@ object KgPipeline {
     * rewrites the store's current content into a compact file set in one
     * replace-mode snapshot: the url-keyed tables re-establish the
     * `url_bucket=N/` layout (recomputed from `url` — the file data cannot
-    * carry it, staging strips partition columns) at roughly one file per
-    * bucket, so manifest pruning keeps working; log tables (lineage,
-    * failed) coalesce to a bounded count. Row sets are byte-identical —
-    * pure layout maintenance, schedule-composable; [[graft.sources
-    * .SnapshotStore.expireSnapshots]] reclaims the replaced files. */
+    * carry it, staging strips partition columns) at one file per bucket
+    * (the commit's distribution rule), so manifest pruning keeps working;
+    * log tables (lineage, failed) coalesce to a bounded count. Row sets
+    * are byte-identical — pure layout maintenance, schedule-composable;
+    * [[graft.sources.SnapshotStore.expireSnapshots]] reclaims the replaced
+    * files. */
   def compactStoreFiles(spark: SparkSession, tableDir: String): Option[Int] = {
     def bucketed(table: String)(df: DataFrame): (DataFrame, Seq[String]) =
       stageBucketLayout(spark, tableDir, table, df) match {
         case (d, Seq()) => (d.coalesce(8), Seq.empty)
-        case (d, cols) => (d.repartition(UrlBuckets, col("url_bucket")), cols)
+        case partitioned => partitioned // the commit distributes on url_bucket
       }
     graft.sources.SnapshotStore.rewriteTables(spark, tableDir,
       Seq("triples", "done", "lineage", "failed"),

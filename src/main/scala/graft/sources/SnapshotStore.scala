@@ -1,7 +1,8 @@
 package graft.sources
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
 
 /** Snapshot-isolated multi-table store — the offline stand-in for the
   * Iceberg commit protocol the north rule's input table implies (no
@@ -110,7 +111,17 @@ object SnapshotStore {
     * path alone — the parquet stand-in for an Iceberg partition transform
     * on the store's tables. Mixing partitioned appends into a table with
     * older flat files is fine: the manifest is just a file list, and
-    * pruning readers keep unmarked paths. */
+    * pruning readers keep unmarked paths.
+    *
+    * Distribution rule (every commit mode): a partitioned table is
+    * hash-distributed on its partition columns before the write (a
+    * `rebalance` hint), so one commit stages one file per partition value
+    * instead of one per value per write task. A value whose data exceeds
+    * AQE's advisory partition size is split across tasks, so write
+    * parallelism is not capped at the number of values. The hint needs
+    * AQE (every session the project builds enables it); Spark drops it
+    * when AQE is off. Unpartitioned tables stage as the caller's frame is
+    * partitioned. */
   def commit(spark: SparkSession, dir: String,
              tables: Map[String, DataFrame], maxRetries: Int = 10,
              meta: Map[String, String] = Map.empty,
@@ -196,16 +207,15 @@ object SnapshotStore {
       val staged: Map[String, Seq[String]] = tables.map { case (name, df) =>
         val stageDir = s"$dir/stage/v$v-$token/$name"
         val writer = partitionBy.get(name) match {
-          case Some(cols) if cols.nonEmpty => df.write.partitionBy(cols: _*)
+          case Some(cols) if cols.nonEmpty => // the distribution rule, see commit
+            df.hint("rebalance", cols.map(col): _*).write.partitionBy(cols: _*)
           case _ => df.write
         }
         writer.mode("overwrite").parquet(stageDir)
         // partitioned stages nest files under col=value/ subdirectories —
-        // list recursively so the manifest records every leaf
-        val it = f.listFiles(new Path(stageDir), true)
+        // walk recursively so the manifest records every leaf
         val files = scala.collection.mutable.ArrayBuffer.empty[String]
-        while (it.hasNext) {
-          val s = it.next()
+        walk(f, new Path(stageDir)) { s =>
           if (s.isFile && s.getPath.getName.endsWith(".parquet"))
             files += s.getPath.toString
         }
@@ -317,26 +327,21 @@ object SnapshotStore {
     val stage = new Path(s"$dir/stage")
     if (f.exists(stage)) {
       val cutoff = nowMs - graceMs
-      val it = f.listFiles(stage, true)
       val doomed = scala.collection.mutable.ArrayBuffer.empty[Path]
-      while (it.hasNext) {
-        val s = it.next()
-        if (s.isFile && !referenced.contains(s.getPath.toString) &&
+      // One pass records the doomed files and every stage dir's mtime
+      // BEFORE anything is deleted: removing a dir's entries bumps its
+      // mtime to "now", so a post-deletion mtime check would always fail
+      // the grace cutoff and the emptied dirs would survive every sweep.
+      // The pre-sweep mtime is the honest age signal. The walk is
+      // deepest-first, so children are recorded (and later deleted) before
+      // their parents, and an emptied parent is seen empty in its turn.
+      val dirAge = scala.collection.mutable.LinkedHashMap.empty[Path, Long]
+      walk(f, stage) { s =>
+        if (s.isDirectory) dirAge(s.getPath) = s.getModificationTime
+        else if (!referenced.contains(s.getPath.toString) &&
             s.getModificationTime < cutoff)
           doomed += s.getPath
       }
-      // Record stage-dir mtimes BEFORE deleting files: removing a dir's
-      // entries bumps its mtime to "now", so a post-deletion mtime check
-      // would always fail the grace cutoff and the emptied dirs would
-      // survive every sweep. The pre-sweep mtime is the honest age signal.
-      val dirAge = scala.collection.mutable.LinkedHashMap.empty[Path, Long]
-      def walk(p: Path): Unit =
-        f.listStatus(p).foreach { s =>
-          // deepest-first: children recorded (and later deleted) before
-          // their parents, so an emptied parent is seen empty in its turn
-          if (s.isDirectory) { walk(s.getPath); dirAge(s.getPath) = s.getModificationTime }
-        }
-      walk(stage)
       doomed.foreach(p => if (f.delete(p, false)) dDel += 1)
       // sweep now-empty stage directories: every commit attempt creates a
       // writer-unique stage/v<N>-<token> dir, so without this the empty
@@ -349,6 +354,17 @@ object SnapshotStore {
     }
     (mDel, dDel)
   }
+
+  /** Visit everything under `root` recursively, each directory after its
+    * contents. Plain `listStatus` reads only path, type, size and mtime;
+    * `listFiles` copies each status into a LocatedFileStatus with its
+    * permission and owner, which the local filesystem loads by forking a
+    * process per file. */
+  private def walk(f: FileSystem, root: Path)(visit: FileStatus => Unit): Unit =
+    f.listStatus(root).foreach { s =>
+      if (s.isDirectory) walk(f, s.getPath)(visit)
+      visit(s)
+    }
 
   // ---- minimal deterministic JSON (no extra deps) -------------------------
 

@@ -456,17 +456,28 @@ class KgPipelineSpec extends SparkSpec {
   test("store file compaction: rows identical, fewer files, bucket layout re-established") {
     import graft.sources.SnapshotStore
     val dir = java.nio.file.Files.createTempDirectory("snaprewrite").toString
-    // amplified corpus (240 urls across all buckets) so each sharded
-    // commit's multi-task staging leaves several files per bucket — the
+    // amplified corpus, committed as three url-disjoint slices that each
+    // cover every bucket (slice = a url's rank within its bucket, mod 3),
+    // so every bucket holds three files before the rewrite — the
     // append-per-run accumulation the rewrite exists to collapse
     val base = Pages.fixtures(spark)
-    val pages = (0 until 40)
+    val pages = (0 until 120) // every url bucket gets at least three urls
       .map(i => base.withColumn("url", concat(col("url"), lit(s"/$i"))))
       .reduce(_ unionByName _)
-    Seq(0 until 16, 16 until 40, 40 until 64).foreach { bs =>
-      KgPipeline.runAndCommitSnapshot(spark, pages, dims, client, dir,
-        KgPipeline.Config(numPartitions = 4, canonicalize = false,
-          buckets = Some(bs)))
+    val slice = pmod(row_number().over(org.apache.spark.sql.expressions.Window
+      .partitionBy(KgPipeline.urlBucket(col("url"))).orderBy("url")), lit(3))
+    val sliced = pages.withColumn("slice", slice)
+    (0 until 3).foreach { k =>
+      val part = sliced.filter(col("slice") === k).drop("slice")
+      val buckets = part.select(KgPipeline.urlBucket(col("url"))).distinct().count()
+      assert(buckets === KgPipeline.UrlBuckets.toLong)
+      val (t0, d0) = (SnapshotStore.fileCount(spark, dir, "triples"),
+        SnapshotStore.fileCount(spark, dir, "done"))
+      KgPipeline.runAndCommitSnapshot(spark, part, dims, client, dir,
+        KgPipeline.Config(numPartitions = 4, canonicalize = false))
+      // the commit stages at most one file per url bucket per table
+      assert(SnapshotStore.fileCount(spark, dir, "triples") - t0 <= buckets)
+      assert(SnapshotStore.fileCount(spark, dir, "done") - d0 <= buckets)
     }
     def rows(v: Option[Int] = None) = SnapshotStore.read(spark, dir, "triples", v).get
       .select("url", "subj_name", "predicate", "obj_name", "obj_final")

@@ -3,6 +3,7 @@ package graft.sources
 import graft.SparkSpec
 import graft.kg._
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 
 class SnapshotStoreSpec extends SparkSpec {
   import spark.implicits._
@@ -52,6 +53,29 @@ class SnapshotStoreSpec extends SparkSpec {
     val all = SnapshotStore.read(spark, dir, "t").get
       .select("id").collect().map(_.getLong(0)).toSet
     assert(all === Set(0L, 1L, 2L, 3L))
+  }
+
+  test("partitioned commit stages one file per partition value; manifest = parquet leaves") {
+    // 8 input partitions, each holding every one of the 4 `part` values
+    val df = spark.range(0, 800, 1, 8).select(col("id"), (col("id") % 4).as("part"))
+    assert(df.rdd.getNumPartitions === 8)
+    val dir = tmp("snapdist")
+    SnapshotStore.commit(spark, dir, Map("t" -> df),
+      partitionBy = Map("t" -> Seq("part")))
+    val files = SnapshotStore.readSnapshot(spark, dir, 1).tables("t")
+    val perValue = files.groupBy(f => "part=\\d+/".r.findFirstIn(f).get)
+      .view.mapValues(_.size).toMap
+    assert(perValue === (0 until 4).map(p => s"part=$p/" -> 1).toMap)
+    // the manifest lists exactly the parquet leaves the stage holds
+    val onDisk = {
+      val it = java.nio.file.Files.walk(java.nio.file.Paths.get(dir, "stage"))
+      try it.iterator().asScala.filter(java.nio.file.Files.isRegularFile(_))
+        .map(_.toString).filter(_.endsWith(".parquet")).toSet
+      finally it.close()
+    }
+    assert(files.map(p => new java.net.URI(p).getPath).toSet === onDisk)
+    assert(files === files.sorted)
+    assert(SnapshotStore.read(spark, dir, "t").get.count() === 800L)
   }
 
   test("commitMixed: append and replace land in one atomic snapshot") {
